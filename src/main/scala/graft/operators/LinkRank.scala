@@ -15,13 +15,11 @@ import org.apache.spark.sql.functions._
   * dst). The two per-iteration scalars (node count, dangling mass)
   * reach the driver as exactly TWO longs: a one-time stats collect
   * for |hosts| and a `Dataset.observe` metric the round's own
-  * materializing action already computes (lazy runs, which may not
-  * collect at construction, keep them as broadcast 1-row cross
-  * joins). Each iteration's rank frame
-  * is persisted, so the plan stays LINEAR in the iteration count —
+  * materializing action already computes. Each iteration's rank frame
+  * is snapshotted, so the plan stays LINEAR in the iteration count —
   * the two uses of the previous ranks (shares + dangling mass) read
-  * one cached relation, never two copies of the lineage, and each
-  * level materializes exactly once at execution. At 10⁸ hosts each
+  * one materialized relation, never two copies of the lineage, and
+  * each level materializes exactly once. At 10⁸ hosts each
   * iteration is two hash shuffles on the host key — the plan a
   * Pregel would lower to anyway — and `iterations` is a small fixed
   * constant (host rank converges in a handful of rounds; production
@@ -58,63 +56,51 @@ import org.apache.spark.sql.functions._
   * (dedup only — unbounded out-sets are inherent to uncapped).
   *
   * Iteration frames are host-dimension-sized (a few dozen bytes per
-  * host). With `materialize = true` each is an eager plan-truncating
-  * snapshot ([[graft.operators.Dedup]]'s checkpoint discipline —
-  * reliable when the session has a checkpoint dir, executor-local
-  * otherwise) and superseded blocks are reclaimed by the
-  * ContextCleaner; with `materialize = false` they persist lazily and
-  * callers running many graphs per session may `unpersist()` when
-  * done.
+  * host). Each is an eager plan-truncating snapshot
+  * ([[graft.operators.Dedup]]'s checkpoint discipline — reliable when
+  * the session has a checkpoint dir, executor-local otherwise) and
+  * superseded blocks are reclaimed by the ContextCleaner.
   */
 object LinkRank {
 
   val Scale: Long = 1000000000000L // 10^12 fixed point
   val PpmDen: Long = 1000000L
 
+  /** Serializes runs: the AQE conf save/restore is session-global, so
+    * two interleaved hostRank calls could otherwise restore each
+    * other's transient value. */
+  private val MaterializeLock = new Object
+
   /** PageRank after `iterations` exact-integer power iterations.
+    *
+    * Runs eagerly with PLAN-TRUNCATING SNAPSHOTS and ADAPTIVE
+    * EXECUTION SCOPED OFF. Each ITERATION's rank frame snapshots
+    * through an eager checkpoint, so iteration k costs O(1) driver
+    * plan work regardless of k and the returned frame is a trivial
+    * select over the last snapshot's leaf; a persist-based variant
+    * keeps the data cached but its LOGICAL plan compounds, and the
+    * driver pays multi-second analysis/cache-lookup walls around
+    * ~50 ms of task work. The support frames (capped edges, degrees)
+    * persist instead — shallow constant-depth plans don't compound,
+    * and eager-checkpointing the edge-dimension frame costs extra full
+    * read/write passes (measured 2× on the 1M-host probe).
+    *
+    * AQE stays off because an iterative dim-graph computation is the
+    * one shape AQE only hurts: partition sizes are known
+    * (graph-dimension rows), nothing needs runtime re-planning, and
+    * per-stage re-optimization across many small stages costs
+    * multiples of the task time (measured 7.8 s vs 2.8 s on the
+    * oracle graph). The session's AQE setting is saved and restored,
+    * and runs are SERIALIZED behind a JVM-wide lock so two interleaved
+    * hostRank calls cannot race the save/restore into a wrong final
+    * value; an unrelated concurrent query on the same SparkSession
+    * still observes AQE off for the duration (documented limitation).
     *
     * @param edges        DataFrame with string `src`, `dst` columns
     *                     (duplicates collapse; self-edges allowed)
     * @param iterations   fixed power-iteration count (≥ 0)
     * @param dampingPpm   damping factor in parts-per-million
     * @param maxOutDegree per-src out-edge cap (0 = uncapped)
-    * @param materialize  run eagerly with PLAN-TRUNCATING SNAPSHOTS
-    *                     and ADAPTIVE EXECUTION SCOPED OFF — the
-    *                     default. Each ITERATION's rank frame
-    *                     snapshots through an eager checkpoint, so
-    *                     iteration k costs O(1) driver plan work
-    *                     regardless of k and the returned frame is a
-    *                     trivial select over the last snapshot's
-    *                     leaf; a persist-based variant keeps the data
-    *                     cached but its LOGICAL plan compounds, and
-    *                     the driver pays multi-second analysis/cache-
-    *                     lookup walls around ~50 ms of task work.
-    *                     The support frames (capped edges, degrees)
-    *                     persist instead — shallow constant-depth
-    *                     plans don't compound, and eager-checkpointing
-    *                     the edge-dimension frame costs extra full
-    *                     read/write passes (measured 2× on the
-    *                     1M-host probe).
-    *                     AQE stays off because an iterative dim-graph
-    *                     computation is the one shape AQE only hurts:
-    *                     partition sizes are known (graph-dimension
-    *                     rows), nothing needs runtime re-planning,
-    *                     and per-stage re-optimization across many
-    *                     small stages costs multiples of the task
-    *                     time (measured 7.8 s vs 2.8 s on the oracle
-    *                     graph). The session's AQE setting is saved
-    *                     and restored, and materialized runs are
-    *                     SERIALIZED behind a JVM-wide lock so two
-    *                     interleaved hostRank calls cannot race the
-    *                     save/restore into a wrong final value; an
-    *                     unrelated concurrent query on the same
-    *                     SparkSession still observes AQE off for the
-    *                     duration (documented limitation — callers
-    *                     needing full isolation should pass
-    *                     materialize = false). Pass false for a fully
-    *                     lazy plan (construction-time zero jobs;
-    *                     iteration frames persist instead of
-    *                     snapshotting so the plan stays linear).
     * @param graphPartitions partition count for the HOST-GRAPH stages
     *                     (everything after the per-edge prep). The
     *                     host graph is dim-sized relative to the
@@ -124,43 +110,32 @@ object LinkRank {
     *                     0 keeps the session default.
     * @return (host, outdeg, rank) — rank at [[Scale]] fixed point
     */
-  /** Serializes materialized runs: the AQE conf save/restore is
-    * session-global, so two interleaved materialized hostRank calls
-    * could otherwise restore each other's transient value. */
-  private val MaterializeLock = new Object
-
   def hostRank(edges: DataFrame, iterations: Int, dampingPpm: Long = 850000L,
-               maxOutDegree: Int = 0, materialize: Boolean = true,
-               graphPartitions: Int = 0): DataFrame = {
+               maxOutDegree: Int = 0, graphPartitions: Int = 0): DataFrame = {
     require(iterations >= 0 && dampingPpm >= 0 && dampingPpm <= PpmDen)
-    if (materialize)
-      MaterializeLock.synchronized {
-        hostRankImpl(edges, iterations, dampingPpm, maxOutDegree,
-          materialize = true, graphPartitions)
-      }
-    else hostRankImpl(edges, iterations, dampingPpm, maxOutDegree,
-      materialize = false, graphPartitions)
+    MaterializeLock.synchronized {
+      hostRankImpl(edges, iterations, dampingPpm, maxOutDegree, graphPartitions)
+    }
   }
 
   private def hostRankImpl(edges: DataFrame, iterations: Int, dampingPpm: Long,
-                           maxOutDegree: Int, materialize: Boolean,
-                           graphPartitions: Int): DataFrame = {
+                           maxOutDegree: Int, graphPartitions: Int): DataFrame = {
     val sess = edges.sparkSession
     val gp =
       if (graphPartitions > 0) graphPartitions
       else sess.sessionState.conf.numShufflePartitions
     val AqeKey = "spark.sql.adaptive.enabled"
-    val savedAqe = if (materialize) sess.conf.get(AqeKey, "true") else ""
-    if (materialize) sess.conf.set(AqeKey, "false")
+    val savedAqe = sess.conf.get(AqeKey, "true")
+    sess.conf.set(AqeKey, "false")
     // Plan-truncating snapshot (the [[Dedup.connectedComponents]]
-    // discipline) for the ITERATION frames only: materialized runs
-    // snapshot each iteration's ranks via EAGER checkpoint — reliable
+    // discipline) for the ITERATION frames only: each iteration's
+    // ranks snapshot via EAGER checkpoint — reliable
     // `DataFrame.checkpoint` when the session has a checkpoint dir,
     // executor-local otherwise — so every iteration's logical plan is
     // O(1)-deep over a leaf. A persist-based variant keeps the DATA
     // cached but the PLAN compounds iteration over iteration, and the
     // driver ends up spending multi-second analysis/cache-lookup
-    // walls around ~50 ms of actual task work (ProbeWall on the
+    // walls around ~50 ms of actual task work (measured on the
     // oracle graph: 6 stages, 0.03 s task sum, 3.6-6.7 s wall
     // persist-based vs ~1.6-2.3 s with truncation). The SUPPORT
     // frames (capped edges, degrees) stay persist-based: their plans
@@ -168,11 +143,13 @@ object LinkRank {
     // checkpoint of the edge-dimension frame would add full extra
     // read/write passes that persist folds into iteration 1 for free
     // (measured 26.6 s vs 12.6 s on the 1M-host/8M-edge probe when
-    // they were snapshotted too). The lazy path keeps persist
-    // everywhere: construction must stay zero-job.
+    // they were snapshotted too).
+    // INVARIANT: `snap` must be an SQL action on its argument (an
+    // EAGER checkpoint / localCheckpoint) — the loop's `obs.get`
+    // blocks until an action over the observed frame completes, so a
+    // lazy snap (persist, a non-eager checkpoint) hangs it forever.
     val snap: DataFrame => DataFrame =
-      if (!materialize) _.persist()
-      else if (sess.sparkContext.getCheckpointDir.isDefined) _.checkpoint(true)
+      if (sess.sparkContext.getCheckpointDir.isDefined) _.checkpoint(true)
       else _.localCheckpoint(true)
     try {
     val dedup = edges
@@ -201,71 +178,46 @@ object LinkRank {
       .repartition(gp, col("host"))
       .groupBy("host").agg(sum(col("o")).as("outdeg"))
       .persist()
-    // MATERIALIZED runs thread the two per-iteration scalars through
-    // the driver instead of broadcast 1-row cross joins (r17, VERDICT
+    // The two per-iteration scalars thread through the driver
+    // instead of broadcast 1-row cross joins (r17, VERDICT
     // r16 #4): |hosts| and the dangling-host count come from ONE
     // 2-long stats collect (model-sized by definition), and round k's
     // dangling mass is OBSERVED during round k's own materializing
     // checkpoint (`Dataset.observe` — an exact int64 sum collected by
     // the action the round already pays), so each iteration runs
     // exactly ONE job with no dangle-aggregation broadcast job and no
-    // crossJoin nodes in the round plan (ProbeJobs: ta_link_rank was
-    // 17 jobs / ta_link_rank_apply 19). Arithmetic is unchanged: the
-    // driver-side div/mul are the same truncating int64 ops the SQL
-    // expressions ran (all operands non-negative), and round 0's
-    // dangle is exactly nDangling · (Scale div n) because every init
-    // rank is the same value. The LAZY path keeps the broadcast form —
-    // it must stay zero-job at construction, so nothing may collect.
-    var ranks: DataFrame = null
-    if (materialize) {
-      val st = deg0.agg(count(lit(1)).as("n"),
-        coalesce(sum(when(col("outdeg") === 0L, lit(1L))), lit(0L)).as("nd")).first()
-      val n = st.getLong(0)
-      val nDangle = st.getLong(1)
-      val rank0 = if (n == 0L) 0L else Scale / n
-      var dangle = nDangle * rank0 // ≤ n·(Scale div n) ≤ Scale — no overflow
-      ranks = deg0.select(col("host"), col("outdeg"), lit(rank0).as("rank"))
-      for (_ <- 0 until iterations) {
-        val shares = ranks.where(col("outdeg") > 0)
-          .select(col("host").as("src"), expr("rank div outdeg").as("share"))
-        val incoming = capped.join(shares, "src")
-          .repartition(gp, col("dst")) // the one genuine re-key per round
-          .groupBy(col("dst").as("host")).agg(sum(col("share")).as("inc"))
-        val base = if (n == 0L) 0L else (Scale - Scale * dampingPpm / PpmDen) / n
-        val dDivN = if (n == 0L) 0L else dangle / n
-        val obs = new org.apache.spark.sql.Observation()
-        ranks = snap(deg0.join(incoming, Seq("host"), "left")
-          .select(col("host"), col("outdeg"),
-            expr(s"$base + $dampingPpm * (coalesce(inc, 0L) + $dDivN) div $PpmDen")
-              .as("rank"))
-          .observe(obs,
-            coalesce(sum(when(col("outdeg") === 0L, col("rank"))), lit(0L)).as("dangle")))
-        dangle = obs.get("dangle").asInstanceOf[Long]
-      }
-    } else {
-      val nn = deg0.agg(count(lit(1)).as("n"))
-      val deg = deg0.crossJoin(broadcast(nn)).persist() // (host, outdeg, n)
-      ranks = deg.select(col("host"), col("outdeg"), col("n"),
-        expr(s"$Scale div n").as("rank"))
-      for (_ <- 0 until iterations) {
-        val shares = ranks.where(col("outdeg") > 0)
-          .select(col("host").as("src"), expr("rank div outdeg").as("share"))
-        val incoming = capped.join(shares, "src")
-          .repartition(gp, col("dst")) // the one genuine re-key per round
-          .groupBy(col("dst").as("host")).agg(sum(col("share")).as("inc"))
-        val dangle = ranks.agg(
-          coalesce(sum(when(col("outdeg") === 0L, col("rank"))), lit(0L)).as("dangle"))
-        // both next-iteration uses (shares + dangle) read ONE snapshot,
-        // never two lineage copies — the plan stays linear
-        ranks = snap(deg.join(incoming, Seq("host"), "left")
-          .crossJoin(broadcast(dangle))
-          .select(col("host"), col("outdeg"), col("n"),
-            expr(s"($Scale - $Scale * $dampingPpm div $PpmDen) div n" +
-              s" + $dampingPpm * (coalesce(inc, 0L) + dangle div n) div $PpmDen").as("rank")))
-      }
+    // crossJoin nodes in the round plan (per-query job traces:
+    // ta_link_rank was 17 jobs / ta_link_rank_apply 19). Arithmetic is
+    // unchanged: the driver-side div/mul are the same truncating int64
+    // ops the SQL expressions ran (all operands non-negative), and
+    // round 0's dangle is exactly nDangling · (Scale div n) because
+    // every init rank is the same value.
+    val st = deg0.agg(count(lit(1)).as("n"),
+      coalesce(sum(when(col("outdeg") === 0L, lit(1L))), lit(0L)).as("nd")).first()
+    val n = st.getLong(0)
+    val nDangle = st.getLong(1)
+    val rank0 = if (n == 0L) 0L else Scale / n
+    var dangle = nDangle * rank0 // ≤ n·(Scale div n) ≤ Scale — no overflow
+    var ranks = deg0.select(col("host"), col("outdeg"), lit(rank0).as("rank"))
+    for (_ <- 0 until iterations) {
+      val shares = ranks.where(col("outdeg") > 0)
+        .select(col("host").as("src"), expr("rank div outdeg").as("share"))
+      val incoming = capped.join(shares, "src")
+        .repartition(gp, col("dst")) // the one genuine re-key per round
+        .groupBy(col("dst").as("host")).agg(sum(col("share")).as("inc"))
+      val base = if (n == 0L) 0L else (Scale - Scale * dampingPpm / PpmDen) / n
+      val dDivN = if (n == 0L) 0L else dangle / n
+      val obs = new org.apache.spark.sql.Observation()
+      ranks = snap(deg0.join(incoming, Seq("host"), "left")
+        .select(col("host"), col("outdeg"),
+          expr(s"$base + $dampingPpm * (coalesce(inc, 0L) + $dDivN) div $PpmDen")
+            .as("rank"))
+        .observe(obs,
+          coalesce(sum(when(col("outdeg") === 0L, col("rank"))), lit(0L)).as("dangle")))
+      dangle = obs.get("dangle").asInstanceOf[Long]
     }
-    // materialized runs return a trivial select over the LAST
-    // snapshot's leaf, so the support caches can release NOW (bounded
+    // the result is a trivial select over the LAST snapshot's
+    // leaf, so the support caches can release NOW (bounded
     // storage across many graphs per session). Superseded LOCAL
     // checkpoint blocks are reclaimed by the ContextCleaner when their
     // frames become unreachable; RELIABLE checkpoint files are only
@@ -274,16 +226,14 @@ object LinkRank {
     // false — the graft entry mains set it; long-lived sessions with a
     // checkpoint dir should too, or sweep the dir out-of-band).
     // iterations == 0 never entered the snapshot loop, so `ranks`
-    // still reads `deg` lazily — snapshot it first so the support
+    // still reads `deg0` lazily — snapshot it first so the support
     // frames can release unconditionally (repeated zero-iteration
     // calls must not leak cached frames for the session's lifetime).
     val out0 = ranks.select(col("host"), col("outdeg"), col("rank"))
-    val out = if (materialize && iterations == 0) snap(out0) else out0
-    if (materialize) {
-      capped.unpersist()
-      deg0.unpersist()
-    }
+    val out = if (iterations == 0) snap(out0) else out0
+    capped.unpersist()
+    deg0.unpersist()
     out
-    } finally if (materialize) sess.conf.set(AqeKey, savedAqe)
+    } finally sess.conf.set(AqeKey, savedAqe)
   }
 }

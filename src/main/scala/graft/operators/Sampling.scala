@@ -231,6 +231,13 @@ object Sampling {
     * re-derives identical budgets, then the cut is the
     * [[mixtureByTokenBudget]] shape with the budget joined instead of
     * inlined.
+    *
+    * Output: the input's columns in their input order, then
+    * `cum_tokens`. Rows whose group is NULL are DROPPED (the budget
+    * join is an equi-join, and NULL matches nothing), but the NULL
+    * group's weight still counts in the normalizer z — exactly the
+    * reference SQL's `JOIN budgets USING (source)` over budgets from a
+    * `GROUP BY source` that keeps the NULL group.
     */
   def mixtureByTemperature(
       df: DataFrame, groupCol: String, keyCol: String, tokCol: String,
@@ -265,7 +272,8 @@ object Sampling {
     groupedHashCumsum(df, groupCol, keyCol, tokCol, seed, buckets)
       .join(broadcast(budgets), Seq(groupCol))
       .filter(col("cum_tokens") <= col("__budget"))
-      .drop("__budget")
+      // the using-join moved groupCol first; restore the input order
+      .select((df.columns :+ "cum_tokens").map(col): _*)
   }
 
   /** Deterministic weighted source interleaving (stride scheduling):

@@ -72,20 +72,6 @@ class LinkRankSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("eager (materialize = true) equals the lazy path, and the lazy plan has the right shape") {
-    val es = (0 until 40).map(i => s"h${i % 6}" -> s"h${(i * 5) % 9}")
-    val lazyDf = LinkRank.hostRank(edges(es: _*), 3, maxOutDegree = 4,
-      materialize = false)
-    val eager = rankMap(LinkRank.hostRank(edges(es: _*), 3, maxOutDegree = 4,
-      materialize = true))
-    assert(rankMap(lazyDf) == eager)
-    // per-iteration shape: joins + aggregations, scalars broadcast —
-    // never a window, never a cartesian product
-    val p = lazyDf.queryExecution.executedPlan.toString
-    assert(!p.contains("Window"), s"no window in any iteration:\n$p")
-    assert(!p.contains("CartesianProduct"), s"scalars must broadcast:\n$p")
-  }
-
   test("duplicate edge spellings cannot evict distinct neighbors from the capped heap") {
     // 'a' spelled 5 times must still count once; with cap 2 the
     // smallest TWO DISTINCT dsts survive

@@ -71,6 +71,23 @@ class SamplingSpec extends SparkSpec {
     assert(Seq(nat, damped, flat).forall(_.values.sum <= 2000L))
   }
 
+  test("temperature mixture keeps the input column order and drops NULL-group rows, whose weight still counts") {
+    import spark.implicits._
+    // 10-token docs; totals a=100, b=400, NULL=900 → T=2 weights 10, 20,
+    // 30 (exact), z = 60 → budgets a=50, b=100. Excluding the NULL
+    // weight from z would give a=100, b=200 instead.
+    val df = ((1 to 10).map(i => (i.toLong, Option("a"), 10L)) ++
+        (1 to 40).map(i => (100L + i, Option("b"), 10L)) ++
+        (1 to 90).map(i => (1000L + i, Option.empty[String], 10L)))
+      .toDF("doc_id", "source", "n_tokens")
+    val out = Sampling.mixtureByTemperature(df, "source", "doc_id", "n_tokens",
+      totalBudget = 300L, temperature = 2.0)
+    assert(out.columns.toSeq == Seq("doc_id", "source", "n_tokens", "cum_tokens"))
+    val kept = out.groupBy("source").agg(sum("n_tokens").as("tok"))
+      .collect().map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(kept == Map(Some("a") -> 50L, Some("b") -> 100L), kept.toString)
+  }
+
   test("samplePerGroup caps group size and is deterministic") {
     import spark.implicits._
     val df = (1 to 300).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "id")

@@ -360,7 +360,7 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Window"), s"pagerank must not window:\n$p")
     assert(!p.contains("CartesianProduct"),
       s"the per-iteration scalars must broadcast, not cartesian:\n$p")
-    // materialized runs snapshot every iteration (plan-truncating
+    // hostRank snapshots every iteration (plan-truncating
     // eager checkpoint), so the returned plan is a trivial select over
     // the LAST snapshot's leaf — O(1) driver plan work per iteration,
     // never a compounding nested-cache lineage

@@ -1,66 +1,5 @@
 package graft.model
 
-import java.sql.Timestamp
-
-/** Core event envelope flowing through a pipeline.
-  *
-  * Mirrors the reference's `firebolt.Event{Payload, Created, Recovery}`
-  * (reference `event.go:5-10`); `withPayload` carries event metadata
-  * through transforms (`event.go:31-37`). On the DataFrame path the
-  * same envelope is the column triple (`payload`, `created`,
-  * `recovery`).
-  */
-final case class FbEvent[T](
-    payload: T,
-    created: Timestamp,
-    recovery: Boolean = false) {
-  def withPayload[U](p: U): FbEvent[U] = FbEvent(p, created, recovery)
-}
-
-/** Structured processing error (reference `error.go:50-54`).
-  *
-  * `toString` matches the reference's `Error()` format
-  * (`error.go:76-78`): "CODE: message".
-  */
-final case class FbError(
-    code: String,
-    message: String,
-    errorinfo: Option[String] = None)
-    extends Exception(s"$code: $message")
-
-object FbError {
-  /** Fallback code for unstructured errors (reference `error.go:33-35`). */
-  val UnknownCode = "ERR_UNKNOWN"
-
-  /** Wrap any throwable the way the reference's JSON marshal does:
-    * FBError passes through, anything else becomes ERR_UNKNOWN.
-    */
-  def wrap(t: Throwable): FbError = t match {
-    case fb: FbError => fb
-    case other       => FbError(UnknownCode, Option(other.getMessage).getOrElse(other.toString))
-  }
-}
-
-/** Dead-letter envelope passed to `error_handler` nodes (reference
-  * `error.go:12-25`). `event` is the original payload rendered to a
-  * string (the reference JSON-marshals the opaque payload).
-  */
-final case class FbEventError(
-    timestamp: Timestamp,
-    event: String,
-    error: FbError)
-
-object FbEventError {
-  def of[T](ev: FbEvent[T], t: Throwable)(render: T => String): FbEventError =
-    FbEventError(ev.created, render(ev.payload), FbError.wrap(t))
-}
-
-/** Request to produce one message to a messaging system (reference
-  * `types.go:4-24`). Matches the Spark Kafka sink's expected columns
-  * `(topic, value)`.
-  */
-final case class ProduceRequest(topic: String, message: Array[Byte])
-
 /** Request to index one document (reference
   * `node/elasticsearch/elasticsearch.go:14-19`).
   */

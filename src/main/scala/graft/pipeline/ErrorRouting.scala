@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** The heart of the port: per-stage success/filtered/failure routing
   * (`node/node.go:178-196`). A stage application splits its input into
   *
-  *   - dead letters (failWhen matched) → `FbEventError` envelope rows
-  *     delivered to the node's error_handler (`node/node.go:277-295`)
+  *   - dead letters (failWhen matched) → EventError envelope rows
+  *     ([[toEventError]]) delivered to the node's error_handler
+  *     (`node/node.go:277-295`)
   *   - filtered rows (keepWhen false) → dropped, counted
   *   - successes → expanded (fanout) then projected, delivered to all
   *     children

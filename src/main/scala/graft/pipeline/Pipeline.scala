@@ -59,6 +59,26 @@ object Pipeline {
     def unpersistAll(): Unit = persisted.foreach(_.unpersist())
   }
 
+  /** The keys [[Built.leaves]] yields for `nodes`, without building a
+    * DAG: the ids of enabled nodes with no active children (a terminal
+    * stage has none), plus `<id>.errors` for each error handler fed by
+    * a stage that can fail. Streaming callers name their sinks by it.
+    */
+  def leafIds(nodes: List[NodeConf], registry: Registry): List[String] =
+    nodes.filterNot(_.disabled).flatMap { conf =>
+      val stage = registry.instantiateNode(conf.name, conf.params)
+      val children = activeChildren(conf, stage)
+      (if (children.isEmpty) List(conf.id) else leafIds(children, registry)) ++
+        Option.when(conf.errorHandler.isDefined && stage.failWhen.isDefined)(conf.id + ".errors")
+    }
+
+  // Terminal stages (kafkaproducer returns (nil, nil),
+  // kafkaproducer.go:92-115) propagate nothing: children configured
+  // under one would otherwise receive the sink-projected frame, which
+  // the reference never delivers.
+  private def activeChildren(conf: NodeConf, stage: Stage): List[NodeConf] =
+    if (stage.terminal) Nil else conf.children.filterNot(_.disabled)
+
   /** Build the full DAG for a config against a batch source DataFrame. */
   def build(
       spark: SparkSession,
@@ -212,13 +232,8 @@ object Pipeline {
 
     val split = ErrorRouting(observed, stageForSplit)
 
-    // Terminal stages (kafkaproducer returns (nil, nil),
-    // kafkaproducer.go:92-115) propagate nothing: children configured
-    // under one would otherwise receive the sink-projected frame, which
-    // the reference never delivers.
-    val activeChildren =
-      if (stage.terminal) Nil else conf.children.filterNot(_.disabled)
-    val consumers = activeChildren.size + (if (conf.errorHandler.isDefined) 1 else 0)
+    val children = activeChildren(conf, stage)
+    val consumers = children.size + (if (conf.errorHandler.isDefined) 1 else 0)
     val out0 = split.output
     val out =
       if (consumers > 1 && persistShared) {
@@ -250,6 +265,6 @@ object Pipeline {
       outObserved,
       split.deadLetters,
       errorHandlerOutput,
-      activeChildren.map(buildNode(outObserved, childParts, _, registry, observe, persistShared, persisted)))
+      children.map(buildNode(outObserved, childParts, _, registry, observe, persistShared, persisted)))
   }
 }

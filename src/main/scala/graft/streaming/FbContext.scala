@@ -31,17 +31,13 @@ final class FbContext(bus: MessageBus, val instanceId: String) {
   def configureLeader(f: () => Boolean): Unit = leaderFunc = f
 
   private val accepted = ConcurrentHashMap.newKeySet[String]()
-  private val handlers = new ConcurrentHashMap[String, BusMessage => Unit]()
 
   /** Subscribe a handler to a set of message types; delivery is gated
     * by [[acceptsMessage]] exactly like the reference's
     * `AcceptsMessage` check (`executor/message.go:76-108`).
     */
   def subscribe(messageTypes: Seq[String], handler: BusMessage => Unit): Unit = {
-    messageTypes.foreach { mt =>
-      accepted.add(mt)
-      handlers.put(mt, handler)
-    }
+    messageTypes.foreach(accepted.add)
     bus.subscribe(messageTypes, m => if (acceptsMessage(m.messageType)) handler(m))
   }
 

@@ -74,7 +74,19 @@ object GraftApp {
       yaml: String,
       registry: Registry = Registry.builtins(),
       bus: Option[MessageBus] = None): Either[String, GraftApp] =
-    AppConfig.parse(yaml, registry).map { config =>
+    for {
+      config <- AppConfig.parse(yaml, registry)
+      params = config.source.params
+      // an invalid recovery limit is a config error, returned before
+      // the election or the control-topic replay starts
+      recovery <- bus match {
+        case Some(b) if params.contains("maxpartitionlag") =>
+          val conf = Nodeconfig(params)
+          RecoveryOrchestrator.limits(conf).map(_ => Some(new RecoveryOrchestrator(
+            new RecoveryLedger, params.getOrElse("topic", config.applicationName), conf, Some(b))))
+        case _ => Right(None)
+      }
+    } yield {
       val ctx = new FbContext(
         bus.getOrElse(new NoopMessageBus),
         spark.sparkContext.applicationId)
@@ -88,15 +100,6 @@ object GraftApp {
         ctx.configureLeader(() => e.isLeader)
         e
       }
-      val recovery = for {
-        b <- bus
-        src = config.source
-        if src.params.contains("maxpartitionlag")
-      } yield new RecoveryOrchestrator(
-        new RecoveryLedger,
-        src.params.getOrElse("topic", config.applicationName),
-        Nodeconfig(src.params),
-        Some(b))
       // StartMessaging semantics: replay-to-EOF BEFORE execution so the
       // ledger holds all pending recovery requests (`message.go:30-48`)
       bus.foreach(_.start())

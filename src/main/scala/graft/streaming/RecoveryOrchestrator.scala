@@ -20,12 +20,8 @@ final class RecoveryOrchestrator(
     config: Nodeconfig,
     bus: Option[MessageBus] = None) {
 
-  val maxLag: Long =
-    config.intConfig("maxpartitionlag", 0, 0, Int.MaxValue).toOption.get.toLong
-  val maxRecords: Long =
-    config.intConfig("parallelrecoverymaxrecords", 0, 0, Int.MaxValue).toOption.get.toLong
-  val maxRatePerSec: Long =
-    config.intConfig("parallelrecoverymaxrate", 0, 0, Int.MaxValue).toOption.get.toLong
+  val (maxLag, maxRecords, maxRatePerSec) =
+    RecoveryOrchestrator.limits(config).fold(e => throw new IllegalArgumentException(e), identity)
 
   bus.foreach(_.subscribe(Seq("recoverycancelall"), _ => cancelAll()))
 
@@ -88,4 +84,17 @@ final class RecoveryOrchestrator(
   def cancelAll(): Unit = ledger.cancelAll()
 
   def pendingCount: Int = ledger.requestCount
+}
+
+object RecoveryOrchestrator {
+
+  /** (max partition lag, replay volume cap, replay rate cap), each 0
+    * when absent, or the reference's config message for the first value
+    * that is not an integer in [0, Int.MaxValue].
+    */
+  def limits(config: Nodeconfig): Either[String, (Long, Long, Long)] = for {
+    lag <- config.intConfig("maxpartitionlag", 0, 0, Int.MaxValue)
+    records <- config.intConfig("parallelrecoverymaxrecords", 0, 0, Int.MaxValue)
+    rate <- config.intConfig("parallelrecoverymaxrate", 0, 0, Int.MaxValue)
+  } yield (lag.toLong, records.toLong, rate.toLong)
 }

@@ -5,14 +5,49 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** Custom keyed state over `KeyValueGroupedDataset` — the Structured
   * Streaming path for semantics the built-in windowed aggregations
-  * can't express. Used for streaming exact-dedup: the batch operator
-  * (`graft.operators.Dedup.exact`) needs the whole key group; on an
-  * unbounded stream the group never completes, so first-seen-wins with
-  * TTL'd state is the standard scale shape (state size = live key
-  * cardinality, bounded by the TTL watermark, partitioned by key hash
-  * across executors).
+  * can't express: the streaming twins of the batch curation operators
+  * (dedup, keep-latest, mixture, packing, near-dup, simhash, SemDeDup,
+  * top-k, KMV, WARC revisit). A batch operator needs the whole key
+  * group; on an unbounded stream the group never completes, so each
+  * twin keeps one state row per live key (partitioned by key hash
+  * across executors) and folds every micro-batch into it.
+  *
+  * Every processing-time operator shares ONE state policy: the Spark
+  * state API is called only in [[keyedState]] (grouping, Append mode,
+  * timeout selection) and [[ttlStep]] (timeout expiry, state store,
+  * TTL re-arm), so an operator is a pure `Option[S] => (Option[S],
+  * out)` transition. With `ttlMs > 0` a key's state expires that long
+  * after its last update, which bounds state size by live key
+  * cardinality; `ttlMs = 0` keeps state forever.
   */
 object StatefulOps {
+
+  /** The shared per-key state policy. A timed-out key removes its state
+    * and emits nothing. Otherwise `step` sees the prior state and
+    * returns the next one (`None` keeps the prior state untouched) plus
+    * the rows to emit; a key that holds state afterwards re-arms its
+    * processing-time timeout when `ttlMs > 0`.
+    */
+  private def ttlStep[S, O](state: GroupState[S], ttlMs: Long)(
+      step: Option[S] => (Option[S], Iterator[O])): Iterator[O] =
+    if (state.hasTimedOut) {
+      state.remove()
+      Iterator.empty
+    } else {
+      val (next, out) = step(state.getOption)
+      next.foreach(state.update)
+      if (ttlMs > 0 && state.exists) state.setTimeoutDuration(ttlMs)
+      out
+    }
+
+  /** The one `groupByKey` + `flatMapGroupsWithState` driver of the
+    * processing-time operators: Append output, processing-time timeouts
+    * only when a TTL is set.
+    */
+  private def keyedState[K: Encoder, V, S: Encoder, O: Encoder](ds: Dataset[V], ttlMs: Long)(
+      key: V => K)(f: (K, Iterator[V], GroupState[S]) => Iterator[O]): Dataset[O] =
+    ds.groupByKey(key).flatMapGroupsWithState[S, O](OutputMode.Append,
+      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout)(f)
 
   final case class Keyed(key: String, value: String, tsMillis: Long)
   final case class DedupResult(key: String, value: String, tsMillis: Long, dupOfCount: Long)
@@ -35,35 +70,23 @@ object StatefulOps {
     */
   def dedupGroup(key: String, rows: Iterator[Keyed], state: GroupState[SeenState],
                  ttlMs: Long): Iterator[DedupResult] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
+    ttlStep(state, ttlMs) { prior =>
       val batch = rows.toSeq
-      val prior = state.getOption
       val all = prior.map(_.count).getOrElse(0L) + batch.size
       val firstTs = prior.map(_.firstTsMillis)
         .getOrElse(batch.map(_.tsMillis).min)
-      state.update(SeenState(firstTs, all))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      if (prior.isEmpty)
-        Iterator.single {
-          val first = batch.minBy(_.tsMillis)
-          DedupResult(key, first.value, first.tsMillis, batch.size - 1L)
-        }
-      else Iterator.empty
+      val out =
+        if (prior.isEmpty)
+          Iterator.single {
+            val first = batch.minBy(_.tsMillis)
+            DedupResult(key, first.value, first.tsMillis, batch.size - 1L)
+          }
+        else Iterator.empty
+      (Some(SeenState(firstTs, all)), out)
     }
 
-  def streamingDedup(events: Dataset[Keyed], ttlMs: Long): Dataset[DedupResult] = {
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SeenState, DedupResult](OutputMode.Append, timeout) {
-        (key: String, rows: Iterator[Keyed], state: GroupState[SeenState]) =>
-          dedupGroup(key, rows, state, ttlMs)
-      }
-  }
+  def streamingDedup(events: Dataset[Keyed], ttlMs: Long): Dataset[DedupResult] =
+    keyedState(events, ttlMs)(_.key)(dedupGroup(_, _, _, ttlMs))
 
   // ---- streaming keep-latest (CDC snapshot over a stream) ----
 
@@ -115,39 +138,27 @@ object StatefulOps {
     */
   def keepLatestGroup(key: String, rows: Iterator[Keyed], state: GroupState[Latest],
                       ttlMs: Long): Iterator[(String, Latest)] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val batch = rows.toSeq
-      val best = batch.max(keyedRank)
+    ttlStep(state, ttlMs) { prior =>
+      val best = rows.max(keyedRank)
       val challenger = Latest(best.tsMillis, best.value)
-      val winner = state.getOption match {
+      // a losing challenger keeps the current winner's state (None), but
+      // the key was seen, so its TTL still re-arms
+      val winner = prior match {
         case Some(cur) =>
           val c = java.lang.Long.compare(challenger.tsMillis, cur.tsMillis)
           val cmp = if (c != 0) c else utf8Compare(challenger.value, cur.value)
           if (cmp <= 0) None else Some(challenger)
         case None => Some(challenger)
       }
-      winner.foreach(state.update)
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      winner.map(key -> _).iterator
+      (winner, winner.map(key -> _).iterator)
     }
 
   /** Streaming CDC compaction: one output row per key per micro-batch
     * WHEN its latest value changed — the upsert-snapshot feed a
     * downstream materializer consumes idempotently.
     */
-  def streamingKeepLatest(events: Dataset[Keyed], ttlMs: Long = 0L): Dataset[(String, Latest)] = {
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Latest, (String, Latest)](OutputMode.Append, timeout) {
-        (key: String, rows: Iterator[Keyed], state: GroupState[Latest]) =>
-          keepLatestGroup(key, rows, state, ttlMs)
-      }
-  }
+  def streamingKeepLatest(events: Dataset[Keyed], ttlMs: Long = 0L): Dataset[(String, Latest)] =
+    keyedState(events, ttlMs)(_.key)(keepLatestGroup(_, _, _, ttlMs))
 
   // ---- streaming token-budget mixture (incremental corpus cut) ----
 
@@ -188,20 +199,15 @@ object StatefulOps {
     */
   def mixtureGroup(group: String, rows: Iterator[MixtureEvent], state: GroupState[BudgetState],
                    budgetFor: String => Long, ttlMs: Long): Iterator[MixtureKept] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
+    ttlStep(state, ttlMs) { prior =>
       val budget = budgetFor(group)
       val ordered = rows.toSeq.sortBy(e => (hashOrd(e.key), e.key))
-      var cum = state.getOption.map(_.cum).getOrElse(0L)
+      var cum = prior.map(_.cum).getOrElse(0L)
       val out = ordered.flatMap { e =>
         cum += e.tok
         if (cum <= budget) Some(MixtureKept(group, e.key, cum)) else None
       }
-      state.update(BudgetState(cum))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      out.iterator
+      (Some(BudgetState(cum)), out.iterator)
     }
 
   /** Streaming corpus mixture: one state row per source (the running
@@ -211,16 +217,8 @@ object StatefulOps {
     */
   def streamingMixtureByTokenBudget(
       events: Dataset[MixtureEvent], budgetFor: String => Long,
-      ttlMs: Long = 0L): Dataset[MixtureKept] = {
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.group)
-      .flatMapGroupsWithState[BudgetState, MixtureKept](OutputMode.Append, timeout) {
-        (g: String, rows: Iterator[MixtureEvent], state: GroupState[BudgetState]) =>
-          mixtureGroup(g, rows, state, budgetFor, ttlMs)
-      }
-  }
+      ttlMs: Long = 0L): Dataset[MixtureKept] =
+    keyedState(events, ttlMs)(_.group)(mixtureGroup(_, _, _, budgetFor, ttlMs))
 
   // ---- streaming packing (incremental context-window offsets) ----
 
@@ -239,27 +237,14 @@ object StatefulOps {
     * end-to-end in (id, idx) order and stamps `budget`-token window
     * ids. When micro-batches arrive in id order (the Kafka-offset
     * shape), batch-driving the full input equals `packOffsets`
-    * row-for-row.
+    * row-for-row. The recurrence is [[shardedPackGroup]]'s with one
+    * shard: shard-local offsets are then global and `w·1 + 0 = w`.
     */
   def packGroup(stream: String, rows: Iterator[ChunkEvent], state: GroupState[PackState],
                 budget: Long, ttlMs: Long): Iterator[PackedChunk] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val ordered = rows.toSeq.sortBy(e => (e.id, e.idx))
-      var start = state.getOption.map(_.nextStart).getOrElse(0L)
-      val out = ordered.map { e =>
-        val winFirst = start / budget
-        val winLast = if (e.tok == 0) winFirst else (start + e.tok - 1) / budget
-        val r = PackedChunk(stream, e.id, e.idx, e.tok, start, winFirst, winLast)
-        start += e.tok
-        r
-      }
-      state.update(PackState(start))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      out.iterator
-    }
+    shardedPackGroup(stream, 0, rows.map(e => ShardedChunkEvent(stream, 0, e.id, e.idx, e.tok)),
+      state, budget, numShards = 1, ttlMs)
+      .map(c => PackedChunk(stream, c.id, c.idx, c.tok, c.startTok, c.winFirst, c.winLast))
 
   /** Streaming sequence packing: per-stream running offset state (one
     * long), chunks stamped with global start offsets and context-window
@@ -269,14 +254,7 @@ object StatefulOps {
       chunks: Dataset[ChunkEvent], budget: Long,
       ttlMs: Long = 0L): Dataset[PackedChunk] = {
     require(budget > 0, "budget must be positive")
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    chunks
-      .groupByKey(_.stream)
-      .flatMapGroupsWithState[PackState, PackedChunk](OutputMode.Append, timeout) {
-        (st: String, rows: Iterator[ChunkEvent], state: GroupState[PackState]) =>
-          packGroup(st, rows, state, budget, ttlMs)
-      }
+    keyedState(chunks, ttlMs)(_.stream)(packGroup(_, _, _, budget, ttlMs))
   }
 
   // ---- sharded streaming packing (parallel within one stream) ----
@@ -290,7 +268,7 @@ object StatefulOps {
   implicit val shKeyEnc: Encoder[(String, Int)] = Encoders.tuple(Encoders.STRING, Encoders.scalaInt)
 
   /** Per-(stream, shard) transition for [[streamingPackOffsetsSharded]]:
-    * the same running-offset recurrence as [[packGroup]], but the
+    * the running-offset recurrence [[packGroup]] also runs, but the
     * offset axis is SHARD-LOCAL and window ids stitch into the global
     * id space by interleaving — shard s's w-th window is global window
     * `w·numShards + s`. No cross-shard coordination exists at any
@@ -300,12 +278,9 @@ object StatefulOps {
   def shardedPackGroup(stream: String, shard: Int, rows: Iterator[ShardedChunkEvent],
                        state: GroupState[PackState], budget: Long, numShards: Int,
                        ttlMs: Long): Iterator[ShardedPackedChunk] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
+    ttlStep(state, ttlMs) { prior =>
       val ordered = rows.toSeq.sortBy(e => (e.id, e.idx))
-      var start = state.getOption.map(_.nextStart).getOrElse(0L)
+      var start = prior.map(_.nextStart).getOrElse(0L)
       val out = ordered.map { e =>
         val localFirst = start / budget
         val localLast = if (e.tok == 0) localFirst else (start + e.tok - 1) / budget
@@ -314,9 +289,7 @@ object StatefulOps {
         start += e.tok
         r
       }
-      state.update(PackState(start))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      out.iterator
+      (Some(PackState(start)), out.iterator)
     }
 
   /** Sharded streaming sequence packing — the scale path past
@@ -341,14 +314,10 @@ object StatefulOps {
       ttlMs: Long = 0L): Dataset[ShardedPackedChunk] = {
     require(budget > 0, "budget must be positive")
     require(numShards > 0, "numShards must be positive")
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    chunks
-      .groupByKey(e => (e.stream, e.shard))
-      .flatMapGroupsWithState[PackState, ShardedPackedChunk](OutputMode.Append, timeout) {
-        (key: (String, Int), rows: Iterator[ShardedChunkEvent], state: GroupState[PackState]) =>
-          shardedPackGroup(key._1, key._2, rows, state, budget, numShards, ttlMs)
-      }
+    keyedState(chunks, ttlMs)(e => (e.stream, e.shard)) {
+      (key: (String, Int), rows: Iterator[ShardedChunkEvent], state: GroupState[PackState]) =>
+        shardedPackGroup(key._1, key._2, rows, state, budget, numShards, ttlMs)
+    }
   }
 
   // ---- streaming near-dup candidates (MinHash + LSH over a stream) ----
@@ -361,43 +330,52 @@ object StatefulOps {
   implicit val pairEnc: Encoder[CandidatePair] = Encoders.product[CandidatePair]
   implicit val bucketEnc: Encoder[BucketState] = Encoders.product[BucketState]
 
+  /** The bounded-resident bucket step every streaming pair operator
+    * shares. Fresh arrivals — distinct BY ID (a doc re-delivered in one
+    * batch with a changed payload would otherwise self-pair and occupy
+    * two slots) and not yet resident — enter in ascending-id order; each
+    * pairs with every resident through `pairWith` (the operator's own
+    * per-pair test) and then becomes a resident. Once the bucket holds
+    * `cap` docs it is boilerplate: it stops pairing and stops growing,
+    * so state per bucket is bounded by construction and pairs per event
+    * by `cap`. An arrival `admit` rejects is skipped without taking a
+    * slot. Returns the residents, newest first.
+    */
+  private def pairBucket[R](prior: List[R], arrivals: Iterator[R], cap: Int)(
+      id: R => Long, admit: R => Boolean = (_: R) => true)(pairWith: (R, R) => Unit): List[R] = {
+    // membership via a Set and an explicit count: per-arrival bookkeeping
+    // is O(1) instead of the List's O(n) contains/size (pairing itself is
+    // O(residents) — that is the output size, not overhead)
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    prior.foreach(seen += id(_))
+    val fresh = arrivals.toSeq.distinctBy(id).filterNot(r => seen.contains(id(r))).sortBy(id)
+    var resident = prior
+    var count = seen.size
+    fresh.foreach { r =>
+      if (count < cap && admit(r)) {
+        resident.foreach(pairWith(r, _))
+        resident = r :: resident
+        count += 1
+      }
+    }
+    resident
+  }
+
   /** Per-bucket transition (unit-testable via TestGroupState): every new
     * doc in an LSH band bucket pairs with the docs already resident
     * there, across micro-batches. `maxBucket` is the streaming analog of
     * the batch frequency cap ([[graft.operators.Dedup.ngramJaccardPairs]]'
-    * `maxShingleFreq`): once a bucket holds that many docs it is
-    * boilerplate, stops pairing, and stops growing — state per bucket is
-    * bounded by construction, pairs per event by `maxBucket`.
+    * `maxShingleFreq`), with [[pairBucket]]'s capacity contract.
     */
   def nearDupGroup(band: String, rows: Iterator[BandedDoc], state: GroupState[BucketState],
                    maxBucket: Int, ttlMs: Long): Iterator[CandidatePair] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val prior = state.getOption.map(_.docIds).getOrElse(Nil)
-      // membership via a Set and an explicit count: per-arrival bookkeeping
-      // is O(1) instead of the List's O(n) contains/size (pairing itself is
-      // O(residents) — that is the output size, not overhead)
-      val seen = scala.collection.mutable.HashSet.empty[Long]
-      prior.foreach(seen += _)
-      val fresh = rows.map(_.docId).toSeq.distinct.filterNot(seen.contains).sorted
+    ttlStep(state, ttlMs) { prior =>
       val pairs = scala.collection.mutable.ListBuffer[CandidatePair]()
-      var resident = prior
-      var count = seen.size
-      fresh.foreach { id =>
-        if (count < maxBucket) {
-          resident.foreach { other =>
-            pairs += CandidatePair(math.min(id, other), math.max(id, other), band)
-          }
-          resident = id :: resident
-          seen += id
-          count += 1
-        }
+      val resident = pairBucket(prior.map(_.docIds).getOrElse(Nil), rows.map(_.docId),
+          maxBucket)(identity) { (id, other) =>
+        pairs += CandidatePair(math.min(id, other), math.max(id, other), band)
       }
-      state.update(BucketState(resident))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      pairs.iterator
+      (Some(BucketState(resident)), pairs.iterator)
     }
 
   // ---- streaming simhash near-dup pairs (exact hamming, incremental) ----
@@ -419,36 +397,15 @@ object StatefulOps {
     */
   def simhashGroup(blk: String, rows: Iterator[BlockedFp], state: GroupState[FpBucketState],
                    maxHamming: Int, maxBucket: Int, ttlMs: Long): Iterator[SimhashPair] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val prior = state.getOption.map(_.docs).getOrElse(Nil)
-      val seen = scala.collection.mutable.HashSet.empty[Long]
-      prior.foreach(seen += _._1)
-      // distinct BY ID, not by (id, fp): a doc re-delivered in one
-      // batch with a changed fingerprint would otherwise self-pair
-      // (da == db) and occupy two resident slots (semGroup discipline)
-      val fresh = rows.map(e => (e.docId, e.fp)).toSeq.distinctBy(_._1)
-        .filterNot(e => seen.contains(e._1)).sortBy(_._1)
+    ttlStep(state, ttlMs) { prior =>
       val pairs = scala.collection.mutable.ListBuffer[SimhashPair]()
-      var resident = prior
-      var count = seen.size
-      fresh.foreach { case (id, fp) =>
-        if (count < maxBucket) {
-          resident.foreach { case (oid, ofp) =>
-            val h = java.lang.Long.bitCount(fp ^ ofp).toLong
-            if (h <= maxHamming)
-              pairs += SimhashPair(math.min(id, oid), math.max(id, oid), h)
-          }
-          resident = (id, fp) :: resident
-          seen += id
-          count += 1
-        }
+      val resident = pairBucket(prior.map(_.docs).getOrElse(Nil), rows.map(e => (e.docId, e.fp)),
+          maxBucket)(_._1) { case ((id, fp), (oid, ofp)) =>
+        val h = java.lang.Long.bitCount(fp ^ ofp).toLong
+        if (h <= maxHamming)
+          pairs += SimhashPair(math.min(id, oid), math.max(id, oid), h)
       }
-      state.update(FpBucketState(resident))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      pairs.iterator
+      (Some(FpBucketState(resident)), pairs.iterator)
     }
 
   /** Streaming simhash63 near-dup pairs: each document explodes into
@@ -491,19 +448,13 @@ object StatefulOps {
     import org.apache.spark.sql.functions._
     import graft.functions.Hashing
     require(maxHamming <= 3, "4-block blocking is only lossless for hamming <= 3")
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    fps
+    val blocked = fps
       .select(col(idCol).cast("long").as("docId"), col(fpCol).cast("long").as("fp"))
       .select(col("docId"), col("fp"),
         explode(array((0 until 4).map(b =>
           concat_ws("-", lit(b), Hashing.simhash63Block(col("fp"), b))): _*)).as("blk"))
       .as[BlockedFp]
-      .groupByKey(_.blk)
-      .flatMapGroupsWithState[FpBucketState, SimhashPair](OutputMode.Append, timeout) {
-        (blk: String, rows: Iterator[BlockedFp], state: GroupState[FpBucketState]) =>
-          simhashGroup(blk, rows, state, maxHamming, maxBucket, ttlMs)
-      }
+    keyedState(blocked, ttlMs)(_.blk)(simhashGroup(_, _, _, maxHamming, maxBucket, ttlMs))
   }
 
   /** Streaming MinHash+LSH near-dup candidates: each document explodes
@@ -519,20 +470,14 @@ object StatefulOps {
       maxBucket: Int = 1000, ttlMs: Long = 0L): Dataset[CandidatePair] = {
     import org.apache.spark.sql.functions._
     import graft.functions.{Hashing, TextFunctions}
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    docs
+    val banded = docs
       .select(
         col(idCol).cast("long").as("docId"),
         explode(Hashing.lshBandKeys(
           Hashing.minhashSignature(TextFunctions.shingles(col(textCol), n), k),
           k, bands)).as("band"))
       .as[BandedDoc]
-      .groupByKey(_.band)
-      .flatMapGroupsWithState[BucketState, CandidatePair](OutputMode.Append, timeout) {
-        (band: String, rows: Iterator[BandedDoc], state: GroupState[BucketState]) =>
-          nearDupGroup(band, rows, state, maxBucket, ttlMs)
-      }
+    keyedState(banded, ttlMs)(_.band)(nearDupGroup(_, _, _, maxBucket, ttlMs))
   }
 
   final case class BandedDocTs(band: String, docId: Long, ts: java.sql.Timestamp)
@@ -613,8 +558,8 @@ object StatefulOps {
   implicit val semPairEnc: Encoder[SemPair] = Encoders.product[SemPair]
   implicit val listStateEnc: Encoder[ListState] = Encoders.product[ListState]
 
-  /** dot and squared norm folded left-to-right in double — the SAME
-    * summation order as the batch kernels
+  /** dot product folded left-to-right in double (a squared norm is
+    * `dotD(a, a)`) — the SAME summation order as the batch kernels
     * ([[graft.functions.Kernels.vecDot]]/`vecNorm2`), so a streaming
     * pair's cosine is bit-identical to the batch self-join's and the
     * batch-drive oracle can share [[graft.operators.Dedup.semanticPairs]]'
@@ -623,10 +568,6 @@ object StatefulOps {
   private def dotD(a: Seq[Float], b: Seq[Float]): Double = {
     var s = 0.0; var i = 0; val n = math.min(a.length, b.length)
     while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }; s
-  }
-  private def norm2D(a: Seq[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * a(i).toDouble; i += 1 }; s
   }
 
   /** Per-IVF-list transition for [[streamingSemanticCandidates]]: every
@@ -640,43 +581,23 @@ object StatefulOps {
     */
   def semGroup(list: Int, rows: Iterator[ListedVec], state: GroupState[ListState],
                eps: Double, maxList: Int, ttlMs: Long): Iterator[SemPair] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val prior = state.getOption.map(_.docs).getOrElse(Nil)
-      val seen = scala.collection.mutable.HashSet.empty[Long]
-      prior.foreach(seen += _._1)
-      val fresh = rows.map(e => (e.docId, e.vec)).toSeq.distinctBy(_._1)
-        .filterNot(e => seen.contains(e._1)).sortBy(_._1)
+    ttlStep(state, ttlMs) { prior =>
       val pairs = scala.collection.mutable.ListBuffer[SemPair]()
-      var resident = prior
-      var count = seen.size
-      fresh.foreach { case (id, vec) =>
-        if (count < maxList) {
-          val na = norm2D(vec)
-          // zero-norm vectors can never pair (cosine undefined) — they
-          // are skipped entirely rather than admitted as residents,
-          // where each would permanently burn a maxList slot until the
-          // list "fills" with dead vectors and stops pairing live ones.
-          // (The nb > 0 guard stays for state written before this rule.)
-          if (na > 0) {
-            resident.foreach { case (oid, ovec, nb) =>
-              if (nb > 0) {
-                val cos = dotD(vec, ovec) / math.sqrt(na * nb)
-                if (cos > eps)
-                  pairs += SemPair(math.min(id, oid), math.max(id, oid), cos)
-              }
-            }
-            resident = (id, vec, na) :: resident
-            seen += id
-            count += 1
+      // zero-norm vectors can never pair (cosine undefined) — `admit`
+      // skips them entirely rather than admitting them as residents,
+      // where each would permanently burn a maxList slot until the
+      // list "fills" with dead vectors and stops pairing live ones.
+      // (The nb > 0 guard stays for state written before this rule.)
+      val resident = pairBucket(prior.map(_.docs).getOrElse(Nil),
+          rows.map(e => (e.docId, e.vec, dotD(e.vec, e.vec))), maxList)(_._1, _._3 > 0) {
+        case ((id, vec, na), (oid, ovec, nb)) =>
+          if (nb > 0) {
+            val cos = dotD(vec, ovec) / math.sqrt(na * nb)
+            if (cos > eps)
+              pairs += SemPair(math.min(id, oid), math.max(id, oid), cos)
           }
-        }
       }
-      state.update(ListState(resident))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      pairs.iterator
+      (Some(ListState(resident)), pairs.iterator)
     }
 
   // ---- streaming per-key top-k (the curation leaderboard) ----
@@ -706,45 +627,47 @@ object StatefulOps {
     */
   def topKGroup(key: String, rows: Iterator[KeyedOrd], state: GroupState[TopKState],
                 k: Int, ttlMs: Long = 0L): Iterator[TopKRow] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      // worst-first tree + id index: O(log k) per arrival, O(k) memory
-      val worstFirst: Ordering[(Long, Long)] = new Ordering[(Long, Long)] {
-        def compare(a: (Long, Long), b: (Long, Long)): Int = {
-          val c = java.lang.Long.compare(a._1, b._1) // ord ASC
-          if (c != 0) c else java.lang.Long.compare(b._2, a._2) // id DESC
-        }
-      }
-      val byId = scala.collection.mutable.HashMap.empty[Long, Long]
-      val tree = scala.collection.mutable.TreeSet.empty[(Long, Long)](worstFirst)
-      state.getOption.foreach(_.pairs.foreach { case (o, i) =>
-        byId(i) = o; tree += ((o, i))
-      })
-      rows.foreach { e =>
-        byId.get(e.id) match {
-          case Some(o) =>
-            if (e.ord > o) { // same id: keep its best observation
-              tree -= ((o, e.id)); tree += ((e.ord, e.id)); byId(e.id) = e.ord
-            }
-          case None =>
-            if (byId.size < k) {
-              byId(e.id) = e.ord; tree += ((e.ord, e.id))
-            } else {
-              val worst = tree.head
-              if (worst._1 < e.ord || (worst._1 == e.ord && worst._2 > e.id)) {
-                tree -= worst; byId -= worst._2
-                byId(e.id) = e.ord; tree += ((e.ord, e.id))
-              }
-            }
-        }
-      }
-      val best = tree.toList.reverse // best-first: ord DESC, id ASC
-      state.update(TopKState(best))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      best.iterator.map { case (o, i) => TopKRow(key, o, i) }
+    ttlStep(state, ttlMs) { prior =>
+      val best = topKFold(prior.map(_.pairs).getOrElse(Nil), rows.map(e => (e.ord, e.id)), k)(
+        java.lang.Long.compare, java.lang.Long.compare)
+      (Some(TopKState(best)), best.iterator.map { case (o, i) => TopKRow(key, o, i) })
     }
+
+  /** The k-bounded upsert fold both leaderboards share: `prior` and the
+    * result are best-first (ord DESC, id ASC under `ordCmp`/`idCmp`);
+    * an arriving id already on the board keeps its best ord, a new id
+    * takes a free slot or displaces the worst entry if it beats it.
+    */
+  private def topKFold[A, B](prior: List[(A, B)], rows: Iterator[(A, B)], k: Int)(
+      ordCmp: (A, A) => Int, idCmp: (B, B) => Int): List[(A, B)] = {
+    // worst-first tree + id index: O(log k) per arrival, O(k) memory
+    val worstFirst: Ordering[(A, B)] = (a: (A, B), b: (A, B)) => {
+      val c = ordCmp(a._1, b._1) // ord ASC
+      if (c != 0) c else idCmp(b._2, a._2) // id DESC
+    }
+    val byId = scala.collection.mutable.HashMap.empty[B, A]
+    val tree = scala.collection.mutable.TreeSet.empty[(A, B)](worstFirst)
+    prior.foreach { case (o, i) => byId(i) = o; tree += ((o, i)) }
+    rows.foreach { case e @ (ord, id) =>
+      byId.get(id) match {
+        case Some(o) =>
+          if (ordCmp(ord, o) > 0) { // same id: keep its best observation
+            tree -= ((o, id)); tree += e; byId(id) = ord
+          }
+        case None =>
+          if (byId.size < k) {
+            byId(id) = ord; tree += e
+          } else {
+            val worst = tree.head
+            if (worstFirst.lt(worst, e)) {
+              tree -= worst; byId -= worst._2
+              byId(id) = ord; tree += e
+            }
+          }
+      }
+    }
+    tree.toList.reverse // best-first: ord DESC, id ASC
+  }
 
   /** Streaming leaderboard: the incremental form of
     * [[graft.operators.Sampling.capPerGroup]] — per key, the best k
@@ -774,20 +697,13 @@ object StatefulOps {
     require(df.select(col(idCol)).schema.head.dataType !=
         org.apache.spark.sql.types.StringType,
       "streamingTopK: string ids null-cast through the long state — use streamingTopKAny")
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    df.select(col(keyCol).cast("string").as("key"),
+    val ranked = df.select(col(keyCol).cast("string").as("key"),
         ordCol.cast("long").as("ord"), col(idCol).cast("long").as("id"))
       // null ord/id rows are skipped like the batch aggregate's update
       // (and would otherwise fail KeyedOrd's non-nullable encoder)
       .filter(col("ord").isNotNull && col("id").isNotNull)
       .as[KeyedOrd]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TopKState, TopKRow](
-        OutputMode.Append, timeout) {
-        (key: String, rows: Iterator[KeyedOrd], state: GroupState[TopKState]) =>
-          topKGroup(key, rows, state, k, ttlMs)
-      }
+    keyedState(ranked, ttlMs)(_.key)(topKGroup(_, _, _, k, ttlMs))
   }
 
   // ---- generic-typed streaming top-k (string ids / fractional ords) --
@@ -820,44 +736,10 @@ object StatefulOps {
   def topKGroupAny(key: String, rows: Iterator[KeyedOrdAny],
                    state: GroupState[TopKStateAny],
                    k: Int, ttlMs: Long = 0L): Iterator[TopKRowAny] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
-      val worstFirst: Ordering[(Double, String)] = new Ordering[(Double, String)] {
-        def compare(a: (Double, String), b: (Double, String)): Int = {
-          val c = java.lang.Double.compare(a._1, b._1) // ord ASC
-          if (c != 0) c else b._2.compareTo(a._2) // id DESC
-        }
-      }
-      val byId = scala.collection.mutable.HashMap.empty[String, Double]
-      val tree = scala.collection.mutable.TreeSet.empty[(Double, String)](worstFirst)
-      state.getOption.foreach(_.pairs.foreach { case (o, i) =>
-        byId(i) = o; tree += ((o, i))
-      })
-      rows.foreach { e =>
-        byId.get(e.id) match {
-          case Some(o) =>
-            if (java.lang.Double.compare(e.ord, o) > 0) {
-              tree -= ((o, e.id)); tree += ((e.ord, e.id)); byId(e.id) = e.ord
-            }
-          case None =>
-            if (byId.size < k) {
-              byId(e.id) = e.ord; tree += ((e.ord, e.id))
-            } else {
-              val worst = tree.head
-              val cmp = java.lang.Double.compare(worst._1, e.ord)
-              if (cmp < 0 || (cmp == 0 && worst._2.compareTo(e.id) > 0)) {
-                tree -= worst; byId -= worst._2
-                byId(e.id) = e.ord; tree += ((e.ord, e.id))
-              }
-            }
-        }
-      }
-      val best = tree.toList.reverse
-      state.update(TopKStateAny(best))
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-      best.iterator.map { case (o, i) => TopKRowAny(key, o, i) }
+    ttlStep(state, ttlMs) { prior =>
+      val best = topKFold(prior.map(_.pairs).getOrElse(Nil), rows.map(e => (e.ord, e.id)), k)(
+        java.lang.Double.compare, _ compareTo _)
+      (Some(TopKStateAny(best)), best.iterator.map { case (o, i) => TopKRowAny(key, o, i) })
     }
 
   /** [[streamingTopK]] for string ids and/or fractional ords — the
@@ -873,18 +755,11 @@ object StatefulOps {
                        idCol: String, k: Int, ttlMs: Long = 0L): Dataset[TopKRowAny] = {
     import org.apache.spark.sql.functions.col
     require(k > 0, s"streamingTopKAny: k must be positive, got $k")
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    df.select(col(keyCol).cast("string").as("key"),
+    val ranked = df.select(col(keyCol).cast("string").as("key"),
         ordCol.cast("double").as("ord"), col(idCol).cast("string").as("id"))
       .filter(col("ord").isNotNull && col("id").isNotNull)
       .as[KeyedOrdAny]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TopKStateAny, TopKRowAny](
-        OutputMode.Append, timeout) {
-        (key: String, rows: Iterator[KeyedOrdAny], state: GroupState[TopKStateAny]) =>
-          topKGroupAny(key, rows, state, k, ttlMs)
-      }
+    keyedState(ranked, ttlMs)(_.key)(topKGroupAny(_, _, _, k, ttlMs))
   }
 
   /** Streaming SemDeDup candidates: arrivals are assigned to their IVF
@@ -911,19 +786,13 @@ object StatefulOps {
       eps: Double = 0.4, maxList: Int = 100000, ttlMs: Long = 0L): Dataset[SemPair] = {
     import org.apache.spark.sql.functions._
     val unit = graft.operators.Similarity.unitNorm(centroids)
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    docs
+    val listed = docs
       .select(
         graft.functions.Kernels.ivfAssign(col(vecCol), unit).as("list"),
         col(idCol).cast("long").as("docId"),
         col(vecCol).as("vec"))
       .as[ListedVec]
-      .groupByKey(_.list)
-      .flatMapGroupsWithState[ListState, SemPair](OutputMode.Append, timeout) {
-        (list: Int, rows: Iterator[ListedVec], state: GroupState[ListState]) =>
-          semGroup(list, rows, state, eps, maxList, ttlMs)
-      }
+    keyedState(listed, ttlMs)(_.list)(semGroup(_, _, _, eps, maxList, ttlMs))
   }
 
   // ---- streaming KMV distinct sketch ----
@@ -950,26 +819,22 @@ object StatefulOps {
     */
   def kmvGroup(key: String, rows: Iterator[KeyedHash], state: GroupState[KmvState],
                k: Int, ttlMs: Long): Iterator[KmvSnapshot] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
+    ttlStep(state, ttlMs) { prior =>
       val set = scala.collection.mutable.TreeSet.empty[Long]
-      state.getOption.foreach(s => set ++= s.hashes)
+      prior.foreach(s => set ++= s.hashes)
       rows.foreach { r =>
         set += r.h
         if (set.size > k) set -= set.last
       }
-      if (set.isEmpty) Iterator.empty
+      // an empty sketch stores nothing, so it never arms a timeout either
+      if (set.isEmpty) (None, Iterator.empty)
       else {
         val kept = set.toList // ascending
-        state.update(KmvState(kept))
-        if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
         val n = kept.size.toLong
         val kth = kept.last
         val est =
           if (n < k) n else (BigInt(k - 1) * KmvRange / BigInt(kth)).toLong
-        Iterator.single(KmvSnapshot(key, n, kth, est))
+        (Some(KmvState(kept)), Iterator.single(KmvSnapshot(key, n, kth, est)))
       }
     }
 
@@ -989,17 +854,11 @@ object StatefulOps {
                            k: Int = 64, ttlMs: Long = 0L): Dataset[KmvSnapshot] = {
     import org.apache.spark.sql.functions.col
     require(k >= 2, s"streamingDistinctKmv: k must be >= 2, got $k")
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    df.filter(col(valueCol).isNotNull)
+    val hashed = df.filter(col(valueCol).isNotNull)
       .select(col(keyCol).cast("string").as("key"),
         graft.functions.TextFunctions.kmvHash(col(valueCol).cast("string")).as("h"))
       .as[KeyedHash]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[KmvState, KmvSnapshot](OutputMode.Append, timeout) {
-        (key: String, rows: Iterator[KeyedHash], state: GroupState[KmvState]) =>
-          kmvGroup(key, rows, state, k, ttlMs)
-      }
+    keyedState(hashed, ttlMs)(_.key)(kmvGroup(_, _, _, k, ttlMs))
   }
 
   // ---- streaming WARC revisit resolution ----
@@ -1031,12 +890,8 @@ object StatefulOps {
   def revisitGroup(digest: String, rows: Iterator[RevisitEvent],
                    state: GroupState[OrigState], pendingMax: Int,
                    ttlMs: Long): Iterator[ResolvedRevisit] =
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.empty
-    } else {
+    ttlStep(state, ttlMs) { prior =>
       val batch = rows.toSeq
-      val prior = state.getOption
       val keeper = prior.filter(_.origDocId >= 0)
         .map(s => (s.origDocId, s.body))
         .orElse(batch.filter(_.isOriginal).sortBy(_.docId).headOption
@@ -1044,17 +899,15 @@ object StatefulOps {
       val arriving = batch.filterNot(_.isOriginal).map(e => (e.docId, e.uri))
       val pendingPrior = prior.map(_.pending).getOrElse(Nil)
       val dropPrior = prior.map(_.dropped).getOrElse(0L)
-      if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
       keeper match {
         case Some((oid, obody)) =>
           val emit = (pendingPrior ++ arriving).sortBy(_._1)
-          state.update(OrigState(oid, obody, Nil, dropPrior))
-          emit.iterator.map { case (id, uri) => ResolvedRevisit(digest, id, uri, oid, obody) }
+          (Some(OrigState(oid, obody, Nil, dropPrior)),
+            emit.iterator.map { case (id, uri) => ResolvedRevisit(digest, id, uri, oid, obody) })
         case None =>
           val merged = (pendingPrior ++ arriving).sortBy(_._1)
           val kept = merged.take(pendingMax)
-          state.update(OrigState(-1L, "", kept, dropPrior + (merged.size - kept.size)))
-          Iterator.empty
+          (Some(OrigState(-1L, "", kept, dropPrior + (merged.size - kept.size))), Iterator.empty)
       }
     }
 
@@ -1069,12 +922,6 @@ object StatefulOps {
   def streamingResolveRevisits(events: Dataset[RevisitEvent], pendingMax: Int = 100000,
                                ttlMs: Long = 0L): Dataset[ResolvedRevisit] = {
     require(pendingMax > 0, s"streamingResolveRevisits: pendingMax must be > 0")
-    val timeout =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.digest)
-      .flatMapGroupsWithState[OrigState, ResolvedRevisit](OutputMode.Append, timeout) {
-        (digest: String, rows: Iterator[RevisitEvent], state: GroupState[OrigState]) =>
-          revisitGroup(digest, rows, state, pendingMax, ttlMs)
-      }
+    keyedState(events, ttlMs)(_.digest)(revisitGroup(_, _, _, pendingMax, ttlMs))
   }
 }

@@ -98,7 +98,24 @@ class GraftMainSpec extends SparkSpec {
         |        id: secondleaf
         |""".stripMargin, reg).fold(e => fail(e), identity)
     val built = graft.pipeline.Pipeline.build(spark, cfg, reg)
-    assert(GraftMain.leafIds(cfg.nodes).toSet == built.leaves.map(_._1).toSet)
+    assert(graft.pipeline.Pipeline.leafIds(cfg.nodes, reg) == built.leaves.map(_._1))
+    // a terminal stage propagates nothing: its configured child is never
+    // built, so the terminal node itself is the leaf the sink must serve
+    val terminal = graft.config.AppConfig.parse(
+      """application: keys
+        |source:
+        |  name: gmsrc
+        |nodes:
+        |  - name: stringtoproducerequestnode
+        |    children:
+        |      - name: kafkaproducer
+        |        children:
+        |          - name: kafkaproducer
+        |            id: inner
+        |""".stripMargin, reg).fold(e => fail(e), identity)
+    val terminalLeaves = graft.pipeline.Pipeline.build(spark, terminal, reg).leaves.map(_._1)
+    assert(terminalLeaves == List("kafkaproducer"))
+    assert(graft.pipeline.Pipeline.leafIds(terminal.nodes, reg) == terminalLeaves)
   }
 
   test("missing config file is a readable error, not a crash") {

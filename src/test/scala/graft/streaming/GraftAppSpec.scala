@@ -38,6 +38,16 @@ class GraftAppSpec extends SparkSpec {
     assert(GraftApp.fromYaml(spark, "application: x\nsource:\n  name: nosuch\nnodes: []").isLeft)
   }
 
+  test("malformed recovery limits return the config message instead of throwing") {
+    def build(lag: String, records: String) = GraftApp.fromYaml(spark,
+      yaml.replace("maxpartitionlag: \"100\"", s"maxpartitionlag: \"$lag\"")
+        .replace("parallelrecoverymaxrecords: \"500\"", s"parallelrecoverymaxrecords: \"$records\""),
+      bus = Some(new FileMessageBus(Files.createTempFile("graftapp", ".bus"))))
+    assert(build("abc", "500") == Left("expected integer value for config [maxpartitionlag]"))
+    assert(build("100", "-1") == Left(
+      s"config value [parallelrecoverymaxrecords] requires value between [0] and [${Int.MaxValue}]"))
+  }
+
   test("messaging replays to EOF before execute: pending recovery lands in the ledger") {
     val bus = new FileMessageBus(Files.createTempFile("graftapp", ".bus"))
     // a recovery request persisted by a previous incarnation
